@@ -113,11 +113,10 @@ def q_index_search_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_index_search_maxscore_k1000(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-Max/MaxScore-pruned search at k=1000; pruning is lossless
-    (operators/maxscore.py proof), so it shares the BM25 SQL twin.
-    strategy="relation" pins the all-DataFrame plan so this row
-    exercises it (auto would delegate a batch this small to the fused
-    planner, which index_search_maxscore_fused_k1000 already covers)."""
+    """Block-Max/MaxScore-pruned search at k=1000 through the query
+    relation router (a batch this small takes the driver-planned
+    pruning path); pruning is lossless (operators/maxscore.py proof),
+    so it shares the BM25 SQL twin."""
     from splade_spark.operators.maxscore import search_maxscore
 
     idx = _materialized_index(spark, sf_dir)
@@ -126,7 +125,6 @@ def q_index_search_maxscore_k1000(spark: SparkSession, sf_dir: str) -> DataFrame
         idx,
         derive_queries(load_documents(spark, sf_dir)),
         k=1000,
-        strategy="relation",
     )
 
 

@@ -133,9 +133,9 @@ def main() -> None:
         "DRIVER (pyarrow metadata reads — they are invisible here); the "
         "distributed plan is just the retained-block scan (bucket partition "
         "filter AND per-term block_id IN-lists pushed to parquet), one "
-        "mapInPandas kernel, one exchange, top-k. Compare with the ~12-stage "
-        "all-DataFrame search_maxscore plan this replaces for driver-resident "
-        "queries.",
+        "mapInPandas kernel, one exchange, top-k. search_maxscore routes "
+        "query relations of up to 4096 rows here and larger ones to "
+        "exhaustive search.",
     ))
 
     sections.append((
@@ -192,27 +192,6 @@ def main() -> None:
         "(operators/bmp.py), exactly like `search_maxscore_fused`'s "
         "passes; its result is a driver-local relation. Over-limit terms "
         "fall back to `search_fused`, whose plan is documented above.",
-    ))
-
-    from splade_spark.operators.maxscore import search_maxscore
-
-    sections.append((
-        "search_maxscore strategy='relation' (final pruned-scan job)",
-        formatted(search_maxscore(spark, idx_dir, qs, strategy="relation")),
-        "What to check: this is the LAST job of the ~4-job relation plan "
-        "(the block-metadata persist, champion selection, and "
-        "retained-pair collect ran eagerly as their own jobs while the "
-        "relation was being planned — they are invisible here). The "
-        "postings scan carries the bucket partition filter plus the "
-        "retained set as a pushed per-term `block_id IN (...)` literal "
-        "filter (PushedFilters), so byte reads scale with blocks KEPT "
-        "(measured: BENCH/BASELINE.md pruning table); after the Arrow "
-        "decode it is a broadcast q_tf join → hash agg → window top-k. "
-        "The champion floor decodes only the top-block_max blocks "
-        "covering >= k postings per query (metadata window → driver-safe "
-        "collect → the same literal filter shape). Relations <= 4096 rows "
-        "never run it: strategy='auto' collects the texts and delegates "
-        "to the fused planner (zero-to-one cluster jobs).",
     ))
 
     out = [

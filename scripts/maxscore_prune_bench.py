@@ -8,7 +8,8 @@ Byte accounting is computed from the REAL parquet footers with
 pyarrow, by replaying parquet-mr's row-group statistics filter
 (keep a row group iff some disjunct `term_id = t AND block_id IN bs`
 intersects its min/max ranges) against the literal pair sets the
-live search actually fetched (`search_maxscore(debug_pairs=...)`),
+live search actually fetched (the champion/cover/retained pair sets
+`search_maxscore_fused(debug_counts=...)` records beside blocks_kept),
 and summing the surviving row groups' compressed column-chunk sizes
 for exactly the columns each scan projects. Spark's own stage-level
 `inputBytes` metric is NOT used: on local[*] it attributes only
@@ -56,7 +57,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # columns each scan projects (keep in sync with index_query._BLOCK_COLS
-# and the metadata projection in maxscore.search_maxscore)
+# and the metadata projection in maxscore.search_maxscore_fused)
 PAYLOAD_COLS = ["term_id", "block_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"]
 META_COLS = ["term_id", "block_id", "n", "first_doc_id", "last_doc_id", "block_max"]
 
@@ -131,8 +132,9 @@ def main() -> None:
         buckets_for_queries,
         load_stats,
         search,
+        search_fused,
     )
-    from splade_spark.operators.maxscore import search_maxscore
+    from splade_spark.operators.maxscore import search_maxscore_fused
     from splade_spark.session import get_spark
 
     spark = get_spark(app="maxscore-prune-bench", cores=args.cores)
@@ -205,7 +207,8 @@ def main() -> None:
     index_build.POSTINGS_ROWGROUP_BYTES = saved_rg
 
     qtext = "rare " + " ".join(f"t{j}" for j in range(n_terms))
-    queries = spark.createDataFrame([(1, qtext)], "qid long, text string")
+    qrows = [(1, qtext)]
+    queries = spark.createDataFrame(qrows, "qid long, text string")
 
     def timed(fn):
         best = float("inf")
@@ -215,19 +218,17 @@ def main() -> None:
             best = min(best, time.time() - t)
         return best, rows
 
-    # block-count + literal-pair evidence gathered ONCE, untimed
-    # (debug_counts adds two extra count jobs that must not pollute
-    # the timing; debug_pairs adds none)
+    def fetched_pairs(counts: dict) -> dict:
+        """The pair set each pruning pass fetched, by pass name."""
+        return {p: counts[f"{p}_pairs"] for p in ("champion", "cover", "retained")}
+
+    # block-count + pair-set evidence gathered ONCE, untimed
     counts: dict = {}
-    pairs: dict = {}
-    search_maxscore(
-        spark, idx, queries, k=10, debug_counts=counts, debug_pairs=pairs,
-        strategy="relation",
-    ).collect()
+    search_maxscore_fused(spark, idx, qrows, k=10, debug_counts=counts).collect()
     acct = rowgroup_accounting(
         os.path.join(idx_acct, "postings"),
         buckets_for_queries(queries, load_stats(idx)["n_buckets"]),
-        pairs,
+        fetched_pairs(counts),
     )
     # SECOND accounting query over the u-family (absent from the
     # candidate docs): theta comes from ordinary top docs and the
@@ -238,14 +239,11 @@ def main() -> None:
     # the high-max blocks are contiguous and row groups skip; under
     # --scattered every row group holds a high-max block and no stats
     # granularity can skip it.
-    q2 = spark.createDataFrame(
-        [(2, " ".join(f"u{j}" for j in range(n_terms)))], "qid long, text string"
-    )
+    q2rows = [(2, " ".join(f"u{j}" for j in range(n_terms)))]
+    q2 = spark.createDataFrame(q2rows, "qid long, text string")
     counts2: dict = {}
-    pairs2: dict = {}
-    r2_pruned = search_maxscore(
-        spark, idx, q2, k=10, debug_counts=counts2, debug_pairs=pairs2,
-        strategy="relation",
+    r2_pruned = search_maxscore_fused(
+        spark, idx, q2rows, k=10, debug_counts=counts2
     ).collect()
     # losslessness asserted for BOTH queries (this one caught the
     # uniform-candidate knife edge: retained=0 at 6M docs before the
@@ -257,20 +255,9 @@ def main() -> None:
     acct2 = rowgroup_accounting(
         os.path.join(idx_acct, "postings"),
         buckets_for_queries(q2, load_stats(idx)["n_buckets"]),
-        pairs2,
-    )
-    t_ms2, _ = timed(
-        lambda: search_maxscore(spark, idx, q2, k=10, strategy="relation").collect()
-    )
-    t_ms, r_ms = timed(
-        lambda: search_maxscore(spark, idx, queries, k=10, strategy="relation").collect()
+        fetched_pairs(counts2),
     )
     t_ex, r_ex = timed(lambda: search(spark, idx, queries, k=10).collect())
-
-    from splade_spark.operators.index_query import search_fused
-    from splade_spark.operators.maxscore import search_maxscore_fused
-
-    qrows = [(1, qtext)]
     t_msf, r_msf = timed(
         lambda: search_maxscore_fused(spark, idx, qrows, k=10).collect()
     )
@@ -280,11 +267,11 @@ def main() -> None:
     t_serve, r_serve = timed(
         lambda: search_maxscore_fused(spark, idx, qrows, k=10, as_local=True)
     )
-    assert {(r.doc_id, r.score) for r in r_ms} == set(
+    assert {(r.doc_id, r.score) for r in r_msf} == set(
         zip(r_serve.doc_id.tolist(), r_serve.score.tolist())
     ), "as_local serving result diverged"
-    for other, name in [(r_ex, "exhaustive"), (r_msf, "fused-maxscore"), (r_exf, "fused")]:
-        assert {(r.doc_id, r.score) for r in r_ms} == {
+    for other, name in [(r_ex, "exhaustive"), (r_exf, "fused")]:
+        assert {(r.doc_id, r.score) for r in r_msf} == {
             (r.doc_id, r.score) for r in other
         }, f"pruned result diverged from {name}"
     print(
@@ -297,7 +284,6 @@ def main() -> None:
                 "blocks_total": counts["blocks_total"],
                 "blocks_kept": counts["blocks_kept"],
                 "kept_frac": round(counts["blocks_kept"] / counts["blocks_total"], 4),
-                "maxscore_best_s": round(t_ms, 3),
                 "exhaustive_best_s": round(t_ex, 3),
                 "maxscore_fused_best_s": round(t_msf, 3),
                 "maxscore_serve_best_s": round(t_serve, 3),
@@ -319,7 +305,6 @@ def main() -> None:
                     "kept_frac": round(
                         counts2["blocks_kept"] / counts2["blocks_total"], 4
                     ),
-                    "maxscore_best_s": round(t_ms2, 3),
                     **acct2,
                     "pruned_bytes_frac": round(
                         acct2["pruned_total_rg_bytes"]

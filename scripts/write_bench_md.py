@@ -19,6 +19,11 @@ import os
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the stored local[2]/[8]/[32] level tables predate the current box
+OTHER_HOST = (
+    "These levels were measured on another, 32-core host; compare new "
+    "runs with them only as ratios."
+)
 
 
 def _burn(n: int) -> int:
@@ -114,6 +119,8 @@ def main() -> None:
         "codegen JIT + python-worker spawn; 12 sequential single-query",
         "runs for latency).",
         "",
+        OTHER_HOST,
+        "",
         "| metric | " + " | ".join(f"local[{c}]" for c in keys) + " |",
         "|---|" + "---|" * len(keys),
     ]
@@ -145,9 +152,10 @@ def main() -> None:
             "batch and single-query rows above measure. Its one exchange",
             "moves ~12 bytes/posting for EVERY posting of the batch's",
             "terms — ~1.5 GB here (124M postings) — so the dense batch is",
-            "heavily shuffle-bandwidth-bound: 8->32 cores buys 1.37x, not",
-            "4x (page-cache shuffle bandwidth grows little with cores; on",
-            "a real cluster the exchange fans out across machines'",
+            "heavily shuffle-bandwidth-bound: 2->32 cores buys only 1.37x",
+            "(15.53 s -> 11.30 s), and 8->32 cores is 0.67x, a slowdown",
+            "(7.59 s -> 11.30 s) (page-cache shuffle bandwidth grows little",
+            "with cores; on a real cluster the exchange fans out across machines'",
             "disks/NICs instead). The selective-vocabulary",
             "section below is the honest q/s number",
             "for sparse-match workloads.)",
@@ -278,10 +286,11 @@ def main() -> None:
             "retained set is driven by BLOCK MAXIMA — the layout-sensitive",
             "mechanism. Both are asserted lossless vs exhaustive on every",
             "run (the block-max query caught a knife-edge retain bug:",
-            "PRUNE_EPS in operators/maxscore.py). `search_maxscore`",
-            "is forced onto the all-DataFrame plan (strategy='relation');",
-            "with strategy='auto' a 1-query relation would delegate to the",
-            "fused row.",
+            "PRUNE_EPS in operators/maxscore.py). The stored",
+            "`search_maxscore` relation-plan row is historical: that",
+            "all-DataFrame plan was removed, and `search_maxscore` now",
+            "routes small relations to the fused path and large ones to",
+            "exhaustive `search`.",
             "",
         ]
         prs = []
@@ -323,7 +332,12 @@ def main() -> None:
                 bold=True,
             )
         prow("`search` (exhaustive DataFrame) best wall (s)", "{}", "exhaustive_best_s")
-        prow("`search_maxscore` (all-DataFrame two-pass) best wall (s)", "{}", "maxscore_best_s", bold=True)
+        if all("maxscore_best_s" in pr for pr in prs):
+            prow(
+                "`search_maxscore` all-DataFrame relation plan (removed path; stored figure) best wall (s)",
+                "{}",
+                "maxscore_best_s",
+            )
         if all("pruned_bytes_frac" in pr for pr in prs):
             prow("parquet row groups (query-term buckets)", "{:,}", "rg_count")
             lines.append(
@@ -389,7 +403,7 @@ def main() -> None:
             "Byte accounting replays parquet's row-group statistics filter",
             "over the REAL footers (pyarrow) against the literal",
             "(term_id, block_id) pair sets the live search fetched",
-            "(`search_maxscore(debug_pairs=...)`), summing surviving row",
+            "(`search_maxscore_fused(debug_counts=...)`), summing surviving row",
             "groups' compressed column-chunk sizes for the columns each scan",
             "projects. Spark's stage `inputBytes` is NOT usable for this on",
             "local[*]: a probe showed it attributes only footer reads (an",
@@ -410,9 +424,7 @@ def main() -> None:
             "can skip — the measured reason docID assignment (or BMP's",
             "doc-partitioned layout) matters at 100 TB. The block-metadata",
             "working set (the columns MaxScore prunes on) is read ONCE per",
-            "query batch into a persisted relation and amortizes across the",
-            "batch; production keeps it resident, like the fused planner's",
-            "driver-side dictionary pass.",
+            "call by the fused planner's driver-side metadata pass.",
             "",
             "Timed rows run on the production 8 MB-row-group build (the",
             "accounting build's tiny groups would inflate the fused",
@@ -422,15 +434,13 @@ def main() -> None:
             "admits up to ~1M block-metadata rows (~40 MB Arrow) before",
             "falling back, with the per-term cap as the true skew guard",
             "(a 10^12-doc stopword is ~10^8 blocks and never",
-            "materializes). The all-DataFrame RELATION plan pays a ~4-job",
-            "fixed floor (bucket literals, champion selection,",
-            "retained-pair collect, final pruned scan) that keeps it near",
-            "exhaustive parity at 1.5M; by 6M it pulls ahead of",
-            "exhaustive (persisted block metadata, literal pruned scan) —",
-            "the cluster path's at-scale shape. Small query relations",
-            "still delegate to the fused planner (strategy='auto'), whose",
-            "driver fast path answers sub-256-block retained sets with",
-            "zero cluster jobs.",
+            "materializes). The removed all-DataFrame relation plan lost",
+            "wherever it was measured (4.39 s vs 2.31 s for exhaustive",
+            "`search` at 1.5M docs; 5.02 s vs 0.58 s for the fused path at",
+            "6M), so `search_maxscore` is now a size router: relations of",
+            "up to 4,096 rows take the fused planner, whose driver fast",
+            "path answers sub-256-block retained sets with zero cluster",
+            "jobs, and larger ones take exhaustive `search`.",
             "",
         ]
 
@@ -486,6 +496,8 @@ def main() -> None:
             "page-cache state), so each level's row is the best over the",
             "repeated fresh-process runs (levels are independent JVMs — see",
             "batch_walls_all / process_runs_per_level in BENCH/qps*.json):",
+            "",
+            OTHER_HOST,
             "",
             "| metric | " + " | ".join(f"local[{c}]" for c in qkeys) + " |",
             "|---|" + "---|" * len(qkeys),
@@ -563,6 +575,8 @@ def main() -> None:
                 "removes; at 1,024 queries it caps 8->32 scaling. The same",
                 "bench at a larger batch on ONE shared index (layout is",
                 "build-parallelism-independent, so reuse is sound):",
+                "",
+                OTHER_HOST,
                 "",
                 "| metric | " + " | ".join(f"local[{c}]" for c in k2) + " |",
                 "|---|" + "---|" * len(k2),
@@ -751,10 +765,10 @@ def main() -> None:
             "`eval_metrics`; `qrels_graded` and the redundant k=10",
             "`bm25_topk` retired; `index_search_appended` — build even",
             "half, append odd half, search — is new and the most expensive",
-            "row by construction: two finalizes). `index_search_maxscore_",
-            "k1000` still PINS strategy='relation' (its ~4-job fixed floor",
-            "is expected at this SF; it wins at 6M docs, pruning table",
-            "above).",
+            "row by construction: two finalizes). The",
+            "`index_search_maxscore_k1000` time above is the removed",
+            "all-DataFrame relation plan, which the row pinned then; the",
+            "row now runs through the `search_maxscore` size router.",
             "",
             "### r3->r4 suite-drift attribution (BENCH/drift/*.json)",
             "",

@@ -218,26 +218,23 @@ def search_bmp(
     ``search_quantized``). Returns score long instead of double.
     """
     import json
-    from collections import Counter
 
     import numpy as np
     import pyarrow.dataset as pads
 
-    from splade_spark.functions.tokenize import py_tokenize
     from splade_spark.operators.index_query import (
-        buckets_for_terms,
         decode_blocks_vectorized,
         decode_doc_ids_vectorized,
-        load_stats,
+        plan_queries,
         require_impacts,
-        search_fused,
+        search_fused_planned,
     )
 
-    stats = load_stats(index_dir)
+    plan = plan_queries(index_dir, query_rows)
     if not quantized:
-        require_impacts(stats)
-    gap_codec = stats.get("gap_codec", "vbyte")
-    n_docs = int(stats["n_docs"])
+        require_impacts(plan.stats)
+    gap_codec = plan.gap_codec
+    n_docs = int(plan.stats["n_docs"])
 
     def exhaustive_fallback():
         if quantized:
@@ -245,7 +242,7 @@ def search_bmp(
 
             qdf = spark.createDataFrame(query_rows, "qid long, text string")
             return search_quantized(spark, index_dir, qdf, k=k)
-        return search_fused(spark, index_dir, query_rows, k, threshold)
+        return search_fused_planned(spark, plan, k, threshold)
 
     # an index whose BMP table was never built (or was invalidated by
     # an append's postings rewrite) answers exhaustively, same routing
@@ -257,22 +254,8 @@ def search_bmp(
     with open(meta_path) as f:
         doc_block_size = int(json.load(f)["doc_block_size"])
 
-    qtf: dict[int, Counter] = {
-        qid: Counter(py_tokenize(text)) for qid, text in query_rows
-    }
-    all_terms = sorted({t for c in qtf.values() for t in c})
-    dict_tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
-        columns=["term", "term_id", "df"],
-        filter=pads.field("term").isin(all_terms),
-    )
-    tid_of = dict(
-        zip(dict_tbl.column("term").to_pylist(), dict_tbl.column("term_id").to_pylist())
-    )
-    dfs = dict(
-        zip(dict_tbl.column("term_id").to_pylist(), dict_tbl.column("df").to_pylist())
-    )
     max_blocks = n_docs // doc_block_size + 1
-    if any(min(df, max_blocks) > term_block_limit for df in dfs.values()):
+    if any(min(df, max_blocks) > term_block_limit for df in plan.df.values()):
         return exhaustive_fallback()
 
     out_schema = (
@@ -280,37 +263,27 @@ def search_bmp(
         if quantized
         else "qid long, doc_id long, score double, rank int"
     )
-    q_terms: dict[int, dict[int, float]] = {}
-    for qid, c in qtf.items():
-        if quantized:
-            # x50-clip-255 integer query weights (inference_q_SPLADE.py:13,60)
-            t = {
-                tid_of[w]: float(min(int(tf) * 50, 255))
-                for w, tf in c.items()
-                if w in tid_of
-            }
-        else:
-            t = {tid_of[w]: float(tf) for w, tf in c.items() if w in tid_of}
-        t = {tid: w for tid, w in t.items() if w > 0}
-        if t:
-            q_terms[qid] = t
-    if not q_terms:
+    if not plan.terms:
         return spark.createDataFrame([], out_schema)
-    hit_terms = sorted({t for d in q_terms.values() for t in d})
+    # x50-clip-255 integer query weights for the quantized arithmetic
+    # (inference_q_SPLADE.py:13,60); q_tf otherwise
+    q_terms: dict[int, dict[int, float]] = {
+        qid: {
+            t: float(min(int(tf) * 50, 255)) if quantized else tf
+            for t, tf in pairs
+        }
+        for qid, pairs in plan.terms.items()
+    }
 
     # bucket partition-dir pruning for the driver-side metadata and
     # payload fetches (same pushdown the Spark plans get from
     # in_literals("bucket", ...)): both the bmp block-max table and the
     # postings table are hive-partitioned by bucket, so a q-term query
     # touches <= q of the n_buckets directories
-    bucket_flt = pads.field("bucket").isin(
-        buckets_for_terms(
-            [t for t in all_terms if t in tid_of], int(stats["n_buckets"])
-        )
-    )
+    bucket_flt = pads.field("bucket").isin(plan.buckets)
     bmp_tbl = pads.dataset(bmp_dir, partitioning="hive").to_table(
         columns=["term_id", "doc_block", "ub"],
-        filter=bucket_flt & pads.field("term_id").isin(hit_terms),
+        filter=bucket_flt & pads.field("term_id").isin(plan.hit_terms),
     )
     b_tid = bmp_tbl.column("term_id").to_numpy()
     b_blk = bmp_tbl.column("doc_block").to_numpy()

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -110,6 +111,72 @@ def load_term_dict(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def load_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(index_dir, "postings"))
+
+
+@dataclass
+class QueryPlan:
+    """The driver-side front end shared by the driver-resident search
+    paths (``search_fused``, ``search_maxscore_fused``,
+    ``search_bmp``): computed once per call from the query texts and
+    ONE metadata-scale dictionary read, before any postings access."""
+
+    index_dir: str
+    stats: dict
+    gap_codec: str
+    # qid -> (term_id, tf) sorted by term_id; OOV terms and queries
+    # left with no in-vocabulary term are dropped
+    terms: dict[int, list[tuple[int, float]]]
+    df: dict[int, int]  # term_id -> document frequency
+    max_impact: dict[int, float]  # term_id -> max block_max
+    hit_terms: list[int]
+    buckets: list[int]  # bucket partition-prune literals
+
+    def q_arrs(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        """Per-query (term_ids int32, q_tf float64) kernel inputs."""
+        return {
+            qid: (
+                np.array([t for t, _ in pairs], dtype=np.int32),
+                np.array([w for _, w in pairs], dtype=np.float64),
+            )
+            for qid, pairs in self.terms.items()
+        }
+
+
+def plan_queries(index_dir: str, query_rows: list[tuple[int, str]]) -> QueryPlan:
+    """Tokenize driver-resident queries and resolve their terms with
+    one pyarrow read of the term dictionary (term_id, df, max_impact
+    for the query terms only — pushed ``term IN`` filter)."""
+    from collections import Counter
+
+    import pyarrow.dataset as pads
+
+    from splade_spark.functions.tokenize import py_tokenize
+
+    stats = load_stats(index_dir)
+    qtf = {qid: Counter(py_tokenize(text)) for qid, text in query_rows}
+    all_terms = sorted({t for c in qtf.values() for t in c})
+    tbl = pads.dataset(os.path.join(index_dir, "term_dict")).to_table(
+        columns=["term", "term_id", "df", "max_impact"],
+        filter=pads.field("term").isin(all_terms),
+    )
+    words = tbl.column("term").to_pylist()
+    tids = tbl.column("term_id").to_pylist()
+    tid_of = dict(zip(words, tids))
+    terms = {}
+    for qid, c in qtf.items():
+        pairs = sorted((tid_of[t], float(w)) for t, w in c.items() if t in tid_of)
+        if pairs:
+            terms[qid] = pairs
+    return QueryPlan(
+        index_dir=index_dir,
+        stats=stats,
+        gap_codec=stats.get("gap_codec", "vbyte"),
+        terms=terms,
+        df=dict(zip(tids, tbl.column("df").to_pylist())),
+        max_impact=dict(zip(tids, map(float, tbl.column("max_impact").to_pylist()))),
+        hit_terms=sorted(tids),
+        buckets=buckets_for_terms(words, stats["n_buckets"]),
+    )
 
 
 def decode_gaps_many(
@@ -261,7 +328,7 @@ def search_quantized(
     stats = load_stats(index_dir)
     n_buckets = stats["n_buckets"]
     buckets = buckets_for_queries(queries, n_buckets)
-    pruned = postings.filter(F.col("bucket").isin(buckets)).join(
+    pruned = postings.filter(in_literals("bucket", buckets)).join(
         F.broadcast(qtq.select("term_id").distinct()), "term_id", "left_semi"
     )
     decoded = decode_blocks_quant_df(pruned, stats.get("gap_codec", "vbyte"))
@@ -330,6 +397,36 @@ def make_score_kernel(q_arrs: dict, gap_codec: str = "vbyte"):
                 )
 
     return kernel
+
+
+def score_term_major(
+    spark: SparkSession,
+    plan: QueryPlan,
+    keep_expr: "F.Column",
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Term-major scoring of the postings rows ``keep_expr`` selects
+    (within the plan's buckets): one Arrow kernel (decode, q_tf
+    multiply, per-doc partial bincount — output rows ~= candidate
+    docs, not postings) -> one shuffle -> final agg -> top-k."""
+    q_arrs = plan.q_arrs()
+    pruned = load_postings(spark, plan.index_dir).filter(
+        in_literals("bucket", plan.buckets) & keep_expr
+    )
+    partials = pruned.select(*_BLOCK_COLS).mapInPandas(
+        make_score_kernel(q_arrs, plan.gap_codec),
+        schema="qid long, doc_id long, partial double",
+    )
+    scored = (
+        partials.groupBy("qid", "doc_id")
+        .agg(F.round(F.sum("partial"), 6).alias("score"))
+        .filter(F.col("score") > F.lit(threshold))
+    )
+    if len(q_arrs) == 1:
+        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return topk_window(top, k)
+    return topk_window(scored, k)
 
 
 # term-major emits O(sum over queries of candidate docs) partial rows
@@ -546,14 +643,9 @@ def _docmajor_score_kernel(q_arrs: dict, k: int, threshold: float, shard_width: 
 
 def _search_fused_docmajor(
     spark: SparkSession,
-    index_dir: str,
-    q_arrs: dict,
-    buckets: list[int],
-    hit_terms: list[int],
+    plan: QueryPlan,
     k: int,
     threshold: float,
-    gap_codec: str,
-    n_docs: int,
 ) -> DataFrame:
     """Doc-major batch plan: pruned scan -> Arrow block decode ->
     ONE exchange of the decoded postings hashed on contiguous doc
@@ -562,9 +654,8 @@ def _search_fused_docmajor(
     O(pruned postings), independent of how many queries are in the
     batch — the doc-partitioned shard architecture every large search
     deployment uses, expressed as a Spark exchange."""
-    postings = load_postings(spark, index_dir)
-    pruned = postings.filter(
-        in_literals("bucket", buckets) & in_literals("term_id", hit_terms)
+    pruned = load_postings(spark, plan.index_dir).filter(
+        in_literals("bucket", plan.buckets) & in_literals("term_id", plan.hit_terms)
     )
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
     # ~2 doc shards per partition smooths the hash-placement Poisson
@@ -574,17 +665,17 @@ def _search_fused_docmajor(
     # accumulator bound (hit_terms x shard_width x 8 B) would exceed
     # the per-task budget
     shard_width, _n_shards = _guarded_shard_geometry(
-        n_docs, n_parts, len(hit_terms)
+        int(plan.stats["n_docs"]), n_parts, len(plan.hit_terms)
     )
     packed = pruned.select(
         "term_id", "first_doc_id", "n", "doc_gap_bytes", "impact_bytes"
     ).mapInArrow(
-        _docmajor_pack_kernel(shard_width, gap_codec),
+        _docmajor_pack_kernel(shard_width, plan.gap_codec),
         schema="shard long, term_id int, offs binary, vals binary",
     )
     sharded = packed.repartition(n_parts, "shard")
     shard_top = sharded.mapInArrow(
-        _docmajor_score_kernel(q_arrs, k, threshold, shard_width),
+        _docmajor_score_kernel(plan.q_arrs(), k, threshold, shard_width),
         schema="qid long, doc_id long, score double",
     )
     return topk_window(shard_top, k)
@@ -606,9 +697,7 @@ def search_fused(
     Plan: bucket+term_id-pruned postings scan (both predicates are
     literal pushdowns — partition-dir pruning + row-group min/max
     skipping; no semi-join, no term_dict broadcast stage) ->
-    mapInPandas kernel (vbyte decode, q_tf multiply, per-doc partial
-    bincount — output rows ~= candidate docs, not postings) -> one
-    shuffle -> final agg -> top-k. Two stages total.
+    ``score_term_major``. Two stages total.
 
     ``strategy``: "term" pins the plan above; "doc" pins the
     doc-partitioned shard plan (``_search_fused_docmajor``); "auto"
@@ -617,61 +706,40 @@ def search_fused(
     batch regime where term-major's score shuffle scales with batch
     size but doc-major's stays O(pruned postings).
     """
-    from collections import Counter
+    plan = plan_queries(index_dir, query_rows)
+    require_impacts(plan.stats)
+    return search_fused_planned(spark, plan, k, threshold, strategy)
 
-    import pyarrow.dataset as pads
 
-    from splade_spark.functions.hashing import py_md5_int
-    from splade_spark.functions.tokenize import py_tokenize
-
-    stats = load_stats(index_dir)
-    require_impacts(stats)
-    n_buckets = stats["n_buckets"]
-    gap_codec = stats.get("gap_codec", "vbyte")
-    qtf: dict[int, Counter] = {
-        qid: Counter(py_tokenize(text)) for qid, text in query_rows
-    }
-    all_terms = sorted({t for c in qtf.values() for t in c})
-    dset = pads.dataset(os.path.join(index_dir, "term_dict"))
-    tbl = dset.to_table(
-        columns=["term", "term_id", "df"], filter=pads.field("term").isin(all_terms)
-    )
-    tid_of = dict(zip(tbl.column("term").to_pylist(), tbl.column("term_id").to_pylist()))
-    df_of = dict(zip(tbl.column("term_id").to_pylist(), tbl.column("df").to_pylist()))
-
-    q_arrs: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    for qid, c in qtf.items():
-        pairs = sorted((tid_of[t], float(w)) for t, w in c.items() if t in tid_of)
-        if pairs:
-            q_arrs[qid] = (
-                np.array([p[0] for p in pairs], dtype=np.int32),
-                np.array([p[1] for p in pairs], dtype=np.float64),
-            )
-    if not q_arrs:
+def search_fused_planned(
+    spark: SparkSession,
+    plan: QueryPlan,
+    k: int = TOPK_DEFAULT,
+    threshold: float = SCORE_THRESHOLD,
+    strategy: str = "auto",
+) -> DataFrame:
+    """``search_fused`` from an already computed ``QueryPlan`` (the
+    exhaustive fallback of the pruned driver-resident paths)."""
+    if not plan.terms:
         return spark.createDataFrame(
             [], "qid long, doc_id long, score double, rank int"
         )
-    hit_terms = sorted({int(t) for tids, _ in q_arrs.values() for t in tids})
-    buckets = buckets_for_terms(
-        [t for t in all_terms if t in tid_of], n_buckets
-    )
-
     # strategy pick from dictionary metadata only (no postings access):
     # term-major's score shuffle carries ~candidate_pairs rows (grows
     # with batch size and match depth); doc-major's output is bounded
     # by n_parts x n_queries x k regardless. Go doc-major when the
     # collapse is worth its extra exchange (see module comment).
     candidate_pairs = sum(
-        df_of.get(int(t), 0) for tids, _ in q_arrs.values() for t in tids
+        plan.df[t] for pairs in plan.terms.values() for t, _ in pairs
     )
     n_parts = max(spark.sparkContext.defaultParallelism * 2, 8)
-    emit_bound = n_parts * max(len(q_arrs), 1) * k
+    emit_bound = n_parts * len(plan.terms) * k
     # memory-guarded geometry preview: if honoring the accumulator
     # budget would fragment shards below DOC_MAJOR_MIN_WIDTH docs,
     # auto stays term-major (pack-kernel row multiplication would eat
     # the win); an explicit strategy="doc" still runs, guarded
     guarded_width, _ = _guarded_shard_geometry(
-        int(stats["n_docs"]), n_parts, len(hit_terms)
+        int(plan.stats["n_docs"]), n_parts, len(plan.hit_terms)
     )
     if strategy == "doc" or (
         strategy == "auto"
@@ -679,28 +747,10 @@ def search_fused(
         and candidate_pairs > DOC_MAJOR_MIN_ROWS
         and guarded_width >= DOC_MAJOR_MIN_WIDTH
     ):
-        return _search_fused_docmajor(
-            spark, index_dir, q_arrs, buckets, hit_terms, k, threshold,
-            gap_codec, int(stats["n_docs"]),
-        )
-
-    postings = load_postings(spark, index_dir)
-    pruned = postings.filter(
-        in_literals("bucket", buckets) & in_literals("term_id", hit_terms)
+        return _search_fused_docmajor(spark, plan, k, threshold)
+    return score_term_major(
+        spark, plan, in_literals("term_id", plan.hit_terms), k, threshold
     )
-    partials = pruned.select(*_BLOCK_COLS).mapInPandas(
-        make_score_kernel(q_arrs, gap_codec),
-        schema="qid long, doc_id long, partial double",
-    )
-    scored = (
-        partials.groupBy("qid", "doc_id")
-        .agg(F.round(F.sum("partial"), 6).alias("score"))
-        .filter(F.col("score") > F.lit(threshold))
-    )
-    if len(q_arrs) == 1:
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        return topk_window(top, k)
-    return topk_window(scored, k)
 
 
 def search(
@@ -709,7 +759,6 @@ def search(
     queries: DataFrame,
     k: int = TOPK_DEFAULT,
     threshold: float = SCORE_THRESHOLD,
-    postings: DataFrame | None = None,
     query_texts: list[str] | None = None,
 ) -> DataFrame:
     """(qid, doc_id, score, rank) from the compressed index.
@@ -737,8 +786,7 @@ def search(
         .join(term_dict.select("term", "term_id"), "term")
         .select("qid", "term_id", "q_tf")
     )
-    if postings is None:
-        postings = load_postings(spark, index_dir)
+    postings = load_postings(spark, index_dir)
     stats = load_stats(index_dir)
     require_impacts(stats)
     n_buckets = stats["n_buckets"]
@@ -749,7 +797,7 @@ def search(
         buckets = buckets_for_terms(toks, n_buckets)
     else:
         buckets = buckets_for_queries(queries, n_buckets)
-    pruned = postings.filter(F.col("bucket").isin(buckets)).join(
+    pruned = postings.filter(in_literals("bucket", buckets)).join(
         F.broadcast(qt.select("term_id").distinct()), "term_id", "left_semi"
     )
     decoded = decode_blocks_df(pruned, stats.get("gap_codec", "vbyte"))

@@ -539,10 +539,15 @@ def export_hdf5_index(spark, index_dir: str, out_dir: str) -> str:
 
 def import_hdf5_index(spark, in_dir: str):
     """Load a reference HDF5 index directory into a (term_id, doc_id,
-    impact) DataFrame (+ returns the doc_ids list): row indices are
-    mapped back through doc_ids.pkl. The relation is the engine's
+    impact) DataFrame (+ returns the doc_ids list). When doc_ids.pkl
+    holds integer ids, row indices are mapped back through it; any
+    other ids (e.g. string passage ids) cannot be a long doc_id, so
+    doc_id stays the posting row index and the returned doc_ids list
+    is the row -> external id map. The relation is the engine's
     logical-postings shape — feed it to the logical scorer or re-index
     (MIGRATION.md)."""
+    import numbers
+
     import pandas as pd
 
     dim, post = read_array_index(in_dir)
@@ -551,15 +556,16 @@ def import_hdf5_index(spark, in_dir: str):
     if os.path.exists(pkl):
         with open(pkl, "rb") as f:
             doc_ids = pickle.load(f)
+    id_of_row = None
+    if doc_ids is not None and all(
+        isinstance(d, numbers.Integral) for d in doc_ids
+    ):
+        id_of_row = np.asarray(doc_ids, dtype=np.int64)
     frames = []
     for t, (rows, vals) in sorted(post.items()):
         if not len(rows):
             continue
-        ext = (
-            np.array([doc_ids[i] for i in rows])
-            if doc_ids is not None
-            else rows.astype(np.int64)
-        )
+        ext = id_of_row[rows] if id_of_row is not None else rows
         frames.append(
             pd.DataFrame(
                 {

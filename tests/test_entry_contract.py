@@ -67,18 +67,3 @@ def test_entry_smoke(spark):
     assert df.count() > 0
     assert set(df.columns) == {"qid", "doc_id", "score", "rank"}
 
-
-def test_maxscore_entry_takes_relation_plan(spark, monkeypatch):
-    """The driver row index_search_maxscore_k1000 exists to cover the
-    all-DataFrame MaxScore plan — it must NOT delegate to the fused
-    planner (which has its own row)."""
-    from splade_spark.operators import maxscore as ms
-
-    def boom(*a, **kw):
-        raise AssertionError(
-            "index_search_maxscore_k1000 delegated to search_maxscore_fused"
-        )
-
-    monkeypatch.setattr(ms, "search_maxscore_fused", boom)
-    df = entrymod.queries()["index_search_maxscore_k1000"](spark, SF_SMOKE)
-    assert df.count() > 0

@@ -172,6 +172,31 @@ def test_export_import_spark_index(spark, tmp_path):
     assert got_rel == want_set
 
 
+def test_import_keeps_row_index_for_string_doc_ids(spark, tmp_path):
+    """Reference indexes often key passages by string id: those cannot
+    be a long doc_id, so the import keeps the posting row index as
+    doc_id and hands the external ids back through the doc_ids list."""
+    d = str(tmp_path / "h5s")
+    ids = [f"msmarco_passage_{i:02d}" for i in range(6)]
+    posts = [
+        (0, np.array([0, 3, 5], dtype=np.int32), np.array([0.5, 1.0, 2.0], dtype=np.float32)),
+        (2, np.array([1, 3], dtype=np.int32), np.array([0.25, 4.0], dtype=np.float32)),
+    ]
+    H.write_array_index(d, posts, dim=3, doc_ids=ids)
+    rel, back_ids = H.import_hdf5_index(spark, d)
+    assert back_ids == ids
+    got = sorted(
+        (int(r.term_id), int(r.doc_id), float(r.impact)) for r in rel.collect()
+    )
+    assert got == [
+        (0, 0, 0.5), (0, 3, 1.0), (0, 5, 2.0), (2, 1, 0.25), (2, 3, 4.0)
+    ]
+    # the returned list maps each row-index doc_id to its external id
+    assert [back_ids[doc] for _, doc, _ in got] == [
+        ids[0], ids[3], ids[5], ids[1], ids[3]
+    ]
+
+
 def test_reader_handles_continuation_and_nil_messages(tmp_path):
     """libhdf5-written files may carry NIL padding messages and object
     header continuation blocks (type 0x0010); our writer never emits

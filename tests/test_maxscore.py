@@ -43,7 +43,7 @@ def test_maxscore_lossless_and_prunes(spark, built):
     )
     counts: dict = {}
     got = (
-        search_maxscore(spark, built, queries, k=K, debug_counts=counts, strategy="relation")
+        search_maxscore(spark, built, queries, k=K, debug_counts=counts)
         .toPandas()
         .sort_values(["qid", "rank"])
         .reset_index(drop=True)
@@ -70,7 +70,7 @@ def test_maxscore_prunes_skewed_corpus(spark, tmp_path):
     build_index(docs, index_dir, n_segments=1, n_buckets=4, block_size=8, salt_unit=64)
     qdf = spark.createDataFrame([(1, "alpha beta")], "qid long, text string")
     counts: dict = {}
-    got = search_maxscore(spark, index_dir, qdf, k=1, debug_counts=counts, strategy="relation").toPandas()
+    got = search_maxscore(spark, index_dir, qdf, k=1, debug_counts=counts).toPandas()
     want = search(spark, index_dir, qdf, k=1).toPandas()
     assert got.equals(want)
     assert int(got.doc_id.iloc[0]) == 0
@@ -84,28 +84,45 @@ def test_maxscore_single_term_queries(spark, built):
         "qid long, text string",
     )
     want = search(spark, built, qdf, k=K).toPandas()
-    got = search_maxscore(spark, built, qdf, k=K, strategy="relation").toPandas()
+    got = search_maxscore(spark, built, qdf, k=K).toPandas()
     w = want.sort_values(["qid", "rank"]).reset_index(drop=True)
     g = got.sort_values(["qid", "rank"]).reset_index(drop=True)
     assert g.equals(w)
     assert set(g.qid) <= {1, 3}  # OOV query empty
 
 
-def test_auto_strategy_delegates_and_matches_relation_path(spark, built):
-    """A small query relation under strategy='auto' delegates to the
-    driver-planned fused path; rows must equal the forced all-DataFrame
-    plan exactly (both lossless, same kernel arithmetic and tie rule)."""
+def test_router_picks_branch_by_relation_size(spark, built, monkeypatch):
+    """search_maxscore collects a relation of at most
+    FUSED_DELEGATE_LIMIT rows into search_maxscore_fused and sends a
+    larger one to exhaustive search; both branches return the same
+    rows."""
+    from splade_spark.operators import maxscore as ms
+
     docs = load_documents(spark, SF_SMOKE)
     queries = derive_queries(docs)
-    auto = (
-        search_maxscore(spark, built, queries, k=K)
-        .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    )
-    rel = (
-        search_maxscore(spark, built, queries, k=K, strategy="relation")
-        .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
-    )
-    assert auto.equals(rel)
+    taken = []
+    for name in ("search_maxscore_fused", "search"):
+        real = getattr(ms, name)
+
+        def spy(*a, _real=real, _name=name, **kw):
+            taken.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(ms, name, spy)
+
+    def run():
+        return (
+            search_maxscore(spark, built, queries, k=K)
+            .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+        )
+
+    small = run()
+    assert taken == ["search_maxscore_fused"]
+    monkeypatch.setattr(ms, "FUSED_DELEGATE_LIMIT", 0)
+    taken.clear()
+    large = run()
+    assert taken == ["search"]
+    assert small.equals(large)
 
 
 def test_fused_as_local_identity(spark, built):

@@ -51,7 +51,7 @@ def test_pruning_fires_and_stays_lossless(spark, skewed_index):
     queries = spark.createDataFrame([(1, "rare common")], "qid long, text string")
     counts: dict = {}
     pruned = search_maxscore(
-        spark, skewed_index, queries, k=10, debug_counts=counts, strategy="relation"
+        spark, skewed_index, queries, k=10, debug_counts=counts
     ).collect()
     assert counts["blocks_total"] > 50, counts
     kept_frac = counts["blocks_kept"] / counts["blocks_total"]
@@ -170,9 +170,14 @@ def test_fused_guard_falls_back_before_postings_metadata(
 
     monkeypatch.setattr(pads, "dataset", spy)
     queries = [(1, "rare common")]
+    counts: dict = {}
     got = maxscore.search_maxscore_fused(
-        spark, skewed_index, queries, k=10, champion_block_limit=0
+        spark, skewed_index, queries, k=10, champion_block_limit=0,
+        debug_counts=counts,
     ).collect()
+    # a fallback records nothing: an empty dict is how callers count
+    # guard fallbacks
+    assert counts == {}
     # fell back through the exhaustive fused path and still answered
     qdf = spark.createDataFrame(queries, "qid long, text string")
     exhaustive = search(spark, skewed_index, qdf, k=10).collect()
@@ -182,32 +187,24 @@ def test_fused_guard_falls_back_before_postings_metadata(
     assert any(p.rstrip("/").endswith("term_dict") for p in opened)
 
 
-def test_cheap_theta_mode_lossless_and_prunes_single_term(spark, skewed_index):
-    """exact_floor=False: lossless on multi-term queries (weaker theta
-    only weakens pruning), and still prunes a single-term query's own
-    low-block_max blocks (theta = k-th champion partial)."""
-    from splade_spark.operators.maxscore import search_maxscore
+def test_single_term_query_prunes_own_blocks(spark, skewed_index):
+    """A single-term query can only prune its own posting list: theta
+    is the k-th exact score of the term's best docs, and the blocks
+    whose block_max falls below it are skipped."""
+    from splade_spark.operators.maxscore import search_maxscore_fused
 
-    multi = spark.createDataFrame([(1, "rare common")], "qid long, text string")
-    want = search(spark, skewed_index, multi, k=10).collect()
-    got = search_maxscore(
-        spark, skewed_index, multi, k=10, exact_floor=False, strategy="relation"
+    single = [(2, "common")]
+    counts: dict = {}
+    got = search_maxscore_fused(
+        spark, skewed_index, single, k=10, debug_counts=counts
     ).collect()
+    qdf = spark.createDataFrame(single, "qid long, text string")
+    want = search(spark, skewed_index, qdf, k=10).collect()
     assert {(r.doc_id, r.score, r.rank) for r in got} == {
         (r.doc_id, r.score, r.rank) for r in want
     }
-
-    single = spark.createDataFrame([(2, "common")], "qid long, text string")
-    counts: dict = {}
-    got1 = search_maxscore(
-        spark, skewed_index, single, k=10, exact_floor=False, debug_counts=counts, strategy="relation"
-    ).collect()
-    want1 = search(spark, skewed_index, single, k=10).collect()
-    assert {(r.doc_id, r.score, r.rank) for r in got1} == {
-        (r.doc_id, r.score, r.rank) for r in want1
-    }
     # the common term's low-dl docs concentrate its high impacts in few
-    # blocks; the rest prune against the champion-partial floor
+    # blocks; the rest prune against the floor
     assert counts["blocks_kept"] / counts["blocks_total"] < 0.5, counts
 
 
@@ -244,9 +241,7 @@ def test_uniform_candidates_knife_edge_lossless(spark, tmp_path_factory):
         for r in search(spark, idx, queries, k=10).collect()
     }
     assert len(want) >= 10
-    got_rel = search_maxscore(
-        spark, idx, queries, k=10, strategy="relation"
-    ).collect()
+    got_rel = search_maxscore(spark, idx, queries, k=10).collect()
     assert {(r.doc_id, r.score, r.rank) for r in got_rel} == want
     got_fused = search_maxscore_fused(
         spark, idx, [(1, cand)], k=10

@@ -1,21 +1,24 @@
 """Property-based rank identity: random tiny corpora (duplicate texts
 => exact score ties; tiny vocab => hot terms; tiny block/salt sizes =>
 multi-block multi-salt encodes) through the FULL compressed path
-(build_index -> search / search_fused) must match the numpy oracle
-that replicates the reference scorer (task/evaluator.py:152-180),
-rank-for-rank under the pinned (-score, doc_id) tie rule."""
+(build_index -> every search path and routing branch) must match the
+numpy oracle that replicates the reference scorer
+(task/evaluator.py:152-180), rank-for-rank under the pinned
+(-score, doc_id) tie rule."""
 
 from __future__ import annotations
 
 import tempfile
 
+import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from splade_spark.operators import maxscore
 from splade_spark.operators.bmp import build_bmp_index, search_bmp
 from splade_spark.operators.index_build import build_index
 from splade_spark.operators.index_query import search, search_fused
-from splade_spark.operators.maxscore import search_maxscore_fused
+from splade_spark.operators.maxscore import search_maxscore, search_maxscore_fused
 from splade_spark.oracle import OracleIndex
 
 WORDS = ["aa", "bb", "cc", "dd", "ee", "ff"]
@@ -40,7 +43,9 @@ K = 5
     qtexts=st.lists(query_st, min_size=1, max_size=2),
     gap_codec=st.sampled_from(["vbyte", "bitpack"]),
 )
-def test_compressed_paths_match_oracle(spark, corpus, qtexts, gap_codec):
+def test_compressed_paths_match_oracle(
+    spark, monkeypatch, corpus, qtexts, gap_codec
+):
     docs = spark.createDataFrame(
         sorted(corpus.items()), "doc_id long, text string"
     )
@@ -65,14 +70,37 @@ def test_compressed_paths_match_oracle(spark, corpus, qtexts, gap_codec):
     # many blocks (duplicate texts -> score ties exercise strictness)
     build_bmp_index(spark, index_dir, doc_block_size=8)
 
+    with monkeypatch.context() as m:
+        # every relation goes to the exhaustive search branch
+        m.setattr(maxscore, "FUSED_DELEGATE_LIMIT", 0)
+        router_search = search_maxscore(spark, index_dir, qdf, k=K)
+
     for label, run in [
         ("search", search(spark, index_dir, qdf, k=K)),
         ("fused", search_fused(spark, index_dir, qrows, k=K)),
+        ("fused_doc", search_fused(spark, index_dir, qrows, k=K, strategy="doc")),
         ("maxscore_fused", search_maxscore_fused(spark, index_dir, qrows, k=K)),
+        (
+            "maxscore_fused_distributed",
+            search_maxscore_fused(
+                spark, index_dir, qrows, k=K, driver_block_limit=0
+            ),
+        ),
+        (
+            "maxscore_fused_local",
+            search_maxscore_fused(spark, index_dir, qrows, k=K, as_local=True),
+        ),
+        ("router_fused", search_maxscore(spark, index_dir, qdf, k=K)),
+        ("router_search", router_search),
         ("bmp", search_bmp(spark, index_dir, qrows, k=K)),
     ]:
+        rows = (
+            run.itertuples(index=False)
+            if isinstance(run, pd.DataFrame)
+            else run.collect()
+        )
         got: dict[int, list[tuple[int, float]]] = {qid: [] for qid, _ in qrows}
-        for r in sorted(run.collect(), key=lambda r: (r.qid, r.rank)):
+        for r in sorted(rows, key=lambda r: (r.qid, r.rank)):
             got[int(r.qid)].append((int(r.doc_id), float(r.score)))
         for qid, text in qrows:
             exp = want[qid]
